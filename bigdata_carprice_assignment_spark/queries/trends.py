@@ -11,7 +11,7 @@ conditional sums), months formatted as strings on both engines.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
@@ -2019,6 +2019,18 @@ def revenue_periodicity_folding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _day_series(spark: SparkSession, sf_dir: str, value: Column) -> DataFrame:
+    """The orders' day-grain series as ONE row: column ``a``, an array of
+    struct(day, v) sorted by day, ``v`` being the per-day ``value``
+    aggregate. One grouped (map-side combined) aggregate, then one
+    collect_list; the array's length is bounded by the calendar at any
+    scale factor, so the sequential folds over it stay cheap."""
+    d = load_table(spark, sf_dir, "orders").groupBy(
+        F.to_date("o_orderdate").alias("day")
+    ).agg(value.alias("v"))
+    return d.agg(F.sort_array(F.collect_list(F.struct("day", "v"))).alias("a"))
+
+
 @query(
     "holt_linear_daily_revenue",
     oracle="""
@@ -2068,15 +2080,9 @@ def holt_linear_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     to exponential smoothing (each state depends on the previous); the
     scalable variant for MANY series is the same fold per key via
     groupBy(series).agg(aggregate(...)), which this plan shape is."""
-    orders = load_table(spark, sf_dir, "orders")
-    d = orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents")
-    )
-    arr = d.agg(
-        F.sort_array(F.collect_list(F.struct("day", "cents"))).alias("a")
-    ).select(
-        F.expr("transform(a, z -> cast(z.cents as double))").alias("xs")
-    )
+    arr = _day_series(
+        spark, sf_dir, F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
+    ).select(F.expr("transform(a, z -> cast(z.v as double))").alias("xs"))
     st = arr.select(
         F.size("xs").alias("n"),
         F.expr(
@@ -2109,8 +2115,8 @@ aggregate(
 # --------------------------------------------------------------------------
 # Poisson GLM (log link) on the daily order-count series — the second
 # member of the iteration-exact GLM family (see carprice_logit_irls_exact
-# for the logistic member): K unrolled Newton/IRLS steps, each one
-# distributed aggregate of the gradient/Hessian sums + a 3x3 Cramer
+# for the logistic member): K unrolled Newton/IRLS steps, each the
+# gradient/Hessian sums over the day-grain series + a 3x3 Cramer
 # update, generated identically for the DuckDB oracle. Newton's
 # contraction at the fixed point quenches exp()'s cross-engine ulp noise
 # far below the 6dp round.
@@ -2136,26 +2142,52 @@ b0 AS (SELECT CAST(0 AS DOUBLE) AS p0, CAST(0 AS DOUBLE) AS p1,
  CAST(0 AS DOUBLE) AS p2),"""
 
 
+def _pois_newton_sql(p: str, x: str, s: str) -> tuple[dict[str, str], list[str]]:
+    """One Newton/IRLS step of the Poisson GLM as SQL text shared by the
+    DuckDB CTE chain and the Spark fold, so both engines evaluate the same
+    terms in the same association order. ``p``, ``x`` and ``s`` prefix
+    the coefficients ``p0..p2``, the row's ``x1, x2, y`` and the sums.
+    Returns the nine gradient/Hessian sums (name -> per-row term) and the
+    three updated coefficients: ``p`` plus the closed-form 3x3 Cramer
+    solve of H d = g (same index spec as the logistic solver)."""
+    mu = f"exp({p}p0 + {p}p1*{x}x1 + {p}p2*{x}x2)"
+    r = f"({x}y - {mu})"
+    x1, x2 = f"{x}x1", f"{x}x2"
+    terms = {
+        "g0": r, "g1": f"{r}*{x1}", "g2": f"{r}*{x2}",
+        "ha": mu, "hb": f"{mu}*{x1}", "hc": f"{mu}*{x2}",
+        "hd": f"{mu}*{x1}*{x1}", "he": f"{mu}*{x1}*{x2}",
+        "hf": f"{mu}*{x2}*{x2}",
+    }
+    g0, g1, g2, ha, hb, hc, hd, he, hf = (s + n for n in terms)
+    det = (
+        f"({ha}*({hd}*{hf}-{he}*{he}) - {hb}*({hb}*{hf}-{hc}*{he})"
+        f" + {hc}*({hb}*{he}-{hc}*{hd}))"
+    )
+    d0 = (
+        f"({g0}*({hd}*{hf}-{he}*{he}) - {hb}*({g1}*{hf}-{he}*{g2})"
+        f" + {hc}*({g1}*{he}-{hd}*{g2}))"
+    )
+    d1 = (
+        f"({ha}*({g1}*{hf}-{he}*{g2}) - {g0}*({hb}*{hf}-{he}*{hc})"
+        f" + {hc}*({hb}*{g2}-{g1}*{hc}))"
+    )
+    d2 = (
+        f"({ha}*({hd}*{g2}-{g1}*{he}) - {hb}*({hb}*{g2}-{g1}*{hc})"
+        f" + {g0}*({hb}*{he}-{hd}*{hc}))"
+    )
+    return terms, [f"{p}p{i} + {d}/{det}" for i, d in enumerate((d0, d1, d2))]
+
+
 def _pois_sql_step(prev: str, k: int) -> list[str]:
-    mu = "exp(p0 + p1*x1 + p2*x2)"
-    r = f"(y - {mu})"
-    agg = (
-        f"ag{k} AS (SELECT p0, p1, p2, "
-        f"sum({r}) AS g0, sum({r}*x1) AS g1, sum({r}*x2) AS g2, "
-        f"sum({mu}) AS ha, sum({mu}*x1) AS hb, sum({mu}*x2) AS hc, "
-        f"sum({mu}*x1*x1) AS hd, sum({mu}*x1*x2) AS he, "
-        f"sum({mu}*x2*x2) AS hf "
-        f"FROM base, {prev} GROUP BY p0, p1, p2),"
-    )
-    det = "(ha*(hd*hf-he*he) - hb*(hb*hf-hc*he) + hc*(hb*he-hc*hd))"
-    d0 = "(g0*(hd*hf-he*he) - hb*(g1*hf-he*g2) + hc*(g1*he-hd*g2))"
-    d1 = "(ha*(g1*hf-he*g2) - g0*(hb*hf-he*hc) + hc*(hb*g2-g1*hc))"
-    d2 = "(ha*(hd*g2-g1*he) - hb*(hb*g2-g1*hc) + g0*(hb*he-hd*hc))"
-    nxt = (
-        f"b{k} AS (SELECT p0 + {d0}/{det} AS p0, "
-        f"p1 + {d1}/{det} AS p1, p2 + {d2}/{det} AS p2 FROM ag{k}),"
-    )
-    return [agg, nxt]
+    terms, update = _pois_newton_sql("", "", "")
+    sums = ", ".join(f"sum({t}) AS {n}" for n, t in terms.items())
+    coefs = ", ".join(f"{u} AS p{i}" for i, u in enumerate(update))
+    return [
+        f"ag{k} AS (SELECT p0, p1, p2, {sums} "
+        f"FROM base, {prev} GROUP BY p0, p1, p2),",
+        f"b{k} AS (SELECT {coefs} FROM ag{k}),",
+    ]
 
 
 def _pois_exact_oracle() -> str:
@@ -2173,79 +2205,53 @@ def _pois_exact_oracle() -> str:
     return "\n".join(parts) + "\n" + "\nUNION ALL ".join(finals)
 
 
-def _pois_solve(row: dict, p: list[float]) -> list[float]:
-    """Cramer step mirroring the generated SQL term for term (identical
-    to the logistic solver's expressions — same index spec)."""
-    g0, g1, g2 = row["g0"], row["g1"], row["g2"]
-    ha, hb, hc = row["ha"], row["hb"], row["hc"]
-    hd, he, hf = row["hd"], row["he"], row["hf"]
-    det = ha * (hd * hf - he * he) - hb * (hb * hf - hc * he) + hc * (
-        hb * he - hc * hd
-    )
-    d0 = g0 * (hd * hf - he * he) - hb * (g1 * hf - he * g2) + hc * (
-        g1 * he - hd * g2
-    )
-    d1 = ha * (g1 * hf - he * g2) - g0 * (hb * hf - he * hc) + hc * (
-        hb * g2 - g1 * hc
-    )
-    d2 = ha * (hd * g2 - g1 * he) - hb * (hb * g2 - g1 * hc) + g0 * (
-        hb * he - hd * hc
-    )
-    return [p[0] + d0 / det, p[1] + d1 / det, p[2] + d2 / det]
-
-
 @query("poisson_glm_daily_orders", oracle=_pois_exact_oracle())
 def poisson_glm_daily_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Poisson regression (log link) of daily order counts on a scaled
     day index + weekend indicator — 12 unrolled IRLS/Newton steps, each
-    one map-side-combined aggregate of the 9 gradient/Hessian sums over
-    the bounded day-grain series and a closed-form 3x3 Cramer update,
-    replayed by the generated DuckDB CTE chain. Answers "is order
-    volume trending, and is there a weekend effect?" with a GLM instead
-    of eyeballing.
+    the 9 gradient/Hessian sums over the day-grain series and a
+    closed-form 3x3 Cramer update, replayed term for term by the
+    generated DuckDB CTE chain (both generated by ``_pois_newton_sql``).
+    Answers "is order volume trending, and is there a weekend effect?"
+    with a GLM instead of eyeballing.
 
-    Scale: the fact collapses to the day grain first; each Newton step
-    then aggregates ~|days| rows — 12 cheap passes whatever the fact
-    size, state is 3 doubles."""
-    dd = load_table(spark, sf_dir, "orders").groupBy(
-        F.to_date("o_orderdate").alias("day")
-    ).agg(F.count(F.lit(1)).cast("double").alias("y"))
-    m = dd.agg(F.min("day").alias("d0"))
-    base = dd.crossJoin(F.broadcast(m)).select(
-        (F.datediff("day", "d0").cast("double") / 1000).alias("x1"),
-        F.when(F.dayofweek("day").isin(1, 7), 1.0).otherwise(0.0).alias("x2"),
-        "y",
-    ).localCheckpoint()
-    beta = [0.0, 0.0, 0.0]
-    for _ in range(_POIS_ITERS):
-        mu = F.exp(
-            F.lit(beta[0])
-            + F.lit(beta[1]) * F.col("x1")
-            + F.lit(beta[2]) * F.col("x2")
-        )
-        r = F.col("y") - mu
-        row = base.agg(
-            F.sum(r).alias("g0"),
-            F.sum(r * F.col("x1")).alias("g1"),
-            F.sum(r * F.col("x2")).alias("g2"),
-            F.sum(mu).alias("ha"),
-            F.sum(mu * F.col("x1")).alias("hb"),
-            F.sum(mu * F.col("x2")).alias("hc"),
-            F.sum(mu * F.col("x1") * F.col("x1")).alias("hd"),
-            F.sum(mu * F.col("x1") * F.col("x2")).alias("he"),
-            F.sum(mu * F.col("x2") * F.col("x2")).alias("hf"),
-        ).collect()[0].asDict()
-        beta = _pois_solve(row, beta)
-    out = spark.createDataFrame(
-        [
-            ("(intercept)", beta[0]),
-            ("day_index_per_1000", beta[1]),
-            ("is_weekend", beta[2]),
-        ],
-        "feature string, coefficient double",
+    Scale: the fact collapses to the bounded day-grain series first, as
+    one day-sorted array row; the whole fit is then ONE Spark SQL
+    expression, an outer left fold over the 12 steps whose body is an
+    inner left fold of the array into the 9 sums and whose finish
+    applies the Cramer update. Building the DataFrame runs no job beyond
+    the orders reader's schema inference, and state is 3 doubles
+    whatever the fact size."""
+    xs = _day_series(spark, sf_dir, F.count(F.lit(1))).select(
+        F.expr(
+            """
+transform(a, z -> named_struct(
+  'x1', cast(datediff(z.day, a[0].day) as double) / 1000,
+  'x2', if(dayofweek(z.day) in (1, 7), 1D, 0D),
+  'y', cast(z.v as double)))"""
+        ).alias("xs")
     )
-    return out.select(
-        "feature", F.round("coefficient", 6).alias("coefficient")
+    terms, update = _pois_newton_sql("b.", "z.", "s.")
+    zeros = ", ".join(f"'{n}', 0D" for n in terms)
+    sums = ", ".join(f"'{n}', s.{n} + {t}" for n, t in terms.items())
+    coefs = ", ".join(f"'p{i}', {u}" for i, u in enumerate(update))
+    beta = xs.select(
+        F.expr(
+            f"""
+aggregate(
+  sequence(1, {_POIS_ITERS}),
+  named_struct('p0', 0D, 'p1', 0D, 'p2', 0D),
+  (b, k) -> aggregate(
+    xs,
+    named_struct({zeros}),
+    (s, z) -> named_struct({sums}),
+    s -> named_struct({coefs})))"""
+        ).alias("b")
+    )
+    return beta.selectExpr(
+        "stack(3, '(intercept)', round(b.p0, 6), "
+        "'day_index_per_1000', round(b.p1, 6), "
+        "'is_weekend', round(b.p2, 6)) AS (feature, coefficient)"
     )
 
 
@@ -2837,8 +2843,36 @@ def mad_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HUBER_ITERS = 6
 
 
+def _wls_line(sw: str, swx: str, swy: str, swxx: str, swxy: str) -> list[str]:
+    """SQL of the weighted least-squares line [slope, intercept] from its
+    five sums, shared by the DuckDB CTE chain and the Spark fold so both
+    engines solve the normal equations in one association order."""
+    slope = f"({swxy} - {swx} * {swy} / {sw}) / ({swxx} - {swx} * {swx} / {sw})"
+    return [slope, f"{swy} / {sw} - {slope} * ({swx} / {sw})"]
+
+
+def _huber_w(r: str, c: str) -> str:
+    """SQL of the Huber weight min(1, c/|r|) of the absolute residual ``r``."""
+    return f"CASE WHEN {r} <= {c} THEN 1.0 ELSE {c} / {r} END"
+
+
+def _sorted_median(rs: str) -> str:
+    """Spark SQL of the median of the ascending double array ``rs``,
+    interpolated exactly as Spark's ``percentile(v, 0.5)``: at
+    pos = (n - 1) * 0.5 with neighbours lo = rs[floor(pos)] and
+    hi = rs[ceil(pos)], equal neighbours return lo, otherwise
+    (ceil(pos) - pos) * lo + (pos - floor(pos)) * hi."""
+    pos = f"((size({rs}) - 1) * 0.5D)"
+    lo, hi = f"{rs}[floor({pos})]", f"{rs}[ceil({pos})]"
+    return (
+        f"if({lo} = {hi}, {lo}, "
+        f"(ceil({pos}) - {pos}) * {lo} + ({pos} - floor({pos})) * {hi})"
+    )
+
+
 def _huber_oracle() -> str:
-    head = """
+    ols = _wls_line("n", "sx", "sy", "sxx", "sxy")
+    head = f"""
 WITH d AS (
   SELECT CAST(date_trunc('day', o_orderdate) AS DATE) AS day,
          sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
@@ -2855,25 +2889,20 @@ s0 AS (
          sum(x * x) AS sxx, sum(x * y) AS sxy
   FROM xy
 ),
-b0 AS (
-  SELECT (sxy - sx * sy / n) / (sxx - sx * sx / n) AS slope,
-         sy / n - (sxy - sx * sy / n) / (sxx - sx * sx / n) * (sx / n)
-           AS icept
-  FROM s0
-),
+b0 AS (SELECT {ols[0]} AS slope, {ols[1]} AS icept FROM s0),
 sg AS (
   SELECT quantile_cont(abs(xy.y - (b0.icept + b0.slope * xy.x)), 0.5)
            / 0.6745 * 1.345 AS c
   FROM xy, b0
 ),"""
     parts = [head]
+    wls = _wls_line("sw", "swx", "swy", "swxx", "swxy")
     for k in range(1, _HUBER_ITERS + 1):
         r = f"abs(xy.y - (b{k-1}.icept + b{k-1}.slope * xy.x))"
         parts.append(
             f"""
 w{k} AS (
-  SELECT xy.x, xy.y,
-         CASE WHEN {r} <= sg.c THEN 1.0 ELSE sg.c / {r} END AS w
+  SELECT xy.x, xy.y, {_huber_w(r, "sg.c")} AS w
   FROM xy, b{k-1}, sg
 ),
 s{k} AS (
@@ -2881,12 +2910,7 @@ s{k} AS (
          sum(w * x * x) AS swxx, sum(w * x * y) AS swxy
   FROM w{k}
 ),
-b{k} AS (
-  SELECT (swxy - swx * swy / sw) / (swxx - swx * swx / sw) AS slope,
-         swy / sw - (swxy - swx * swy / sw) / (swxx - swx * swx / sw)
-           * (swx / sw) AS icept
-  FROM s{k}
-),"""
+b{k} AS (SELECT {wls[0]} AS slope, {wls[1]} AS icept FROM s{k}),"""
         )
     kf = _HUBER_ITERS
     parts.append(
@@ -2912,78 +2936,78 @@ def huber_regression_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFram
     """Huber M-estimator for the daily-revenue trend, iteration-exact:
     OLS start, robust scale c = 1.345 * MAD/0.6745 of the OLS residuals
     (95% Gaussian efficiency tuning), then 6 unrolled IRLS steps with
-    the Huber weight w = min(1, c/|r|) — each step ONE 5-sum weighted
-    aggregate and a closed-form weighted-least-squares update replayed
+    the Huber weight w = min(1, c/|r|) — each step the 5 weighted sums
+    and a closed-form weighted-least-squares update, replayed
     term-for-term by the generated DuckDB CTE chain. Sits between the
     OLS (efficient, fragile) and Theil-Sen (robust, quadratic pairs)
-    trend fits: full robustness against vertical outliers at one
-    aggregate per iteration. Reports the OLS slope next to the Huber
-    slope so the outlier pull is visible.
+    trend fits: full robustness against vertical outliers at one pass
+    over the day series per iteration. Reports the OLS slope next to
+    the Huber slope so the outlier pull is visible.
 
-    Exactness: the scale is Spark's exact percentile over the
-    calendar-bounded day-grain residuals (== quantile_cont); every iteration's weight expression and
-    normal-equation solve use one shared association order; the Huber
-    psi is CONTINUOUS at |r|=c, so ulp-level sum differences cannot
-    flip a weight discontinuously and IRLS contraction absorbs them.
+    Exactness: the scale is the median of the sorted day-grain OLS
+    residuals, interpolated as Spark's exact percentile (quantile_cont
+    on the DuckDB side); the weight expression and the normal-equation solve
+    are generated for both engines from one template (``_huber_w``,
+    ``_wls_line``); the Huber psi is CONTINUOUS at |r|=c, so ulp-level
+    sum differences cannot flip a weight discontinuously and IRLS
+    contraction absorbs them.
 
-    Scale: day-grain; each iteration is one aggregate, state is two
-    doubles — the same loop shape runs on any corpus at any SF."""
-    orders = load_table(spark, sf_dir, "orders")
-    d = orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents")
+    Scale: the fact collapses to the bounded day-grain series first, as
+    one day-sorted array row; OLS, the residual median, the 6 IRLS steps
+    (an outer left fold over the steps whose body folds the array into
+    the weighted sums and whose finish solves the line) and the
+    downweighted count are then expressions over that row. Building the
+    DataFrame runs no job beyond the orders reader's schema inference,
+    and the fit's state is two doubles whatever the fact size."""
+    xy = _day_series(
+        spark, sf_dir, F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
+    ).select(
+        F.expr(
+            """
+transform(a, z -> named_struct(
+  'x', cast(datediff(z.day, a[0].day) as double),
+  'y', cast(z.v as double) / 100))"""
+        ).alias("xy")
     )
-    mn = d.agg(F.min("day").alias("mnd"))
-    xy = (
-        d.crossJoin(F.broadcast(mn))
-        .select(
-            F.datediff("day", "mnd").cast("double").alias("x"),
-            (F.col("cents").cast("double") / 100).alias("y"),
+    line = _wls_line("s.sw", "s.swx", "s.swy", "s.swxx", "s.swxy")
+
+    def wls_fold(w: str) -> str:
+        # one pass over xy: the five sums of weight w, then the line
+        return f"""
+aggregate(
+  xy,
+  named_struct('sw', 0D, 'swx', 0D, 'swy', 0D, 'swxx', 0D, 'swxy', 0D),
+  (s, p) -> named_struct(
+    'sw', s.sw + {w}, 'swx', s.swx + {w} * p.x, 'swy', s.swy + {w} * p.y,
+    'swxx', s.swxx + {w} * p.x * p.x, 'swxy', s.swxy + {w} * p.x * p.y),
+  s -> named_struct('slope', {line[0]}, 'icept', {line[1]}))"""
+
+    def resid(b: str) -> str:
+        return f"abs(p.y - ({b}.icept + {b}.slope * p.x))"
+
+    # one projection per dependency level (ols -> rs -> c -> h): a fold
+    # referenced twice by the next level is never inlined into it
+    fit = (
+        xy.withColumn("ols", F.expr(wls_fold("1D")))
+        .withColumn("rs", F.expr(f"array_sort(transform(xy, p -> {resid('ols')}))"))
+        .withColumn("c", F.expr(_sorted_median("rs")) / 0.6745 * 1.345)
+        .withColumn(
+            "h",
+            F.expr(
+                f"aggregate(sequence(1, {_HUBER_ITERS}), ols, (b, k) -> "
+                f"{wls_fold(_huber_w(resid('b'), 'c'))})"
+            ),
         )
-        .localCheckpoint()
     )
-    s0 = xy.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-    ).collect()[0]
-    slope = (s0.sxy - s0.sx * s0.sy / s0.n) / (s0.sxx - s0.sx * s0.sx / s0.n)
-    icept = s0.sy / s0.n - slope * (s0.sx / s0.n)
-    ols_slope = slope
-    r0 = xy.select(
-        F.abs(F.col("y") - (F.lit(icept) + F.lit(slope) * F.col("x"))).alias("r")
-    )
-    # day-grain residual frame: calendar-bounded, so the single-buffer
-    # exact percentile (== quantile_cont) is O(bounded) at any SF
-    mad = r0.agg(F.expr("percentile(r, 0.5)").alias("v")).collect()[0]["v"]
-    c = mad / 0.6745 * 1.345
-    for _ in range(_HUBER_ITERS):
-        r = F.abs(F.col("y") - (F.lit(icept) + F.lit(slope) * F.col("x")))
-        w = F.when(r <= F.lit(c), 1.0).otherwise(F.lit(c) / r)
-        sk = xy.select("x", "y", w.alias("w")).agg(
-            F.sum("w").alias("sw"),
-            F.sum(F.col("w") * F.col("x")).alias("swx"),
-            F.sum(F.col("w") * F.col("y")).alias("swy"),
-            F.sum(F.col("w") * F.col("x") * F.col("x")).alias("swxx"),
-            F.sum(F.col("w") * F.col("x") * F.col("y")).alias("swxy"),
-        ).collect()[0]
-        slope = (sk.swxy - sk.swx * sk.swy / sk.sw) / (
-            sk.swxx - sk.swx * sk.swx / sk.sw
-        )
-        icept = sk.swy / sk.sw - slope * (sk.swx / sk.sw)
-    rf = F.abs(F.col("y") - (F.lit(icept) + F.lit(slope) * F.col("x")))
-    dn = xy.agg(
-        F.sum(F.when(rf > F.lit(c), 1).otherwise(0)).alias("n_downweighted"),
-        F.count(F.lit(1)).alias("n_days"),
-    )
-    return dn.select(
-        F.col("n_days").cast("long").alias("n_days"),
-        F.col("n_downweighted").cast("long").alias("n_downweighted"),
-        F.round(F.lit(c), 4).alias("huber_c"),
-        F.round(F.lit(slope), 4).alias("huber_slope"),
-        F.round(F.lit(icept), 4).alias("huber_icept"),
-        F.round(F.lit(ols_slope), 4).alias("ols_slope"),
+    return fit.select(
+        F.size("xy").cast("long").alias("n_days"),
+        F.expr(f"size(filter(xy, p -> {resid('h')} > c))")
+        .cast("long")
+        .alias("n_downweighted"),
+        F.round("c", 4).alias("huber_c"),
+        F.round("h.slope", 4).alias("huber_slope"),
+        F.round("h.icept", 4).alias("huber_icept"),
+        F.round("ols.slope", 4).alias("ols_slope"),
     )
 
 
@@ -3905,13 +3929,9 @@ def holt_winters_weekly_daily_revenue(
     Scale: the fact collapses to the bounded day-grain series first;
     only that ~|days| array is folded. For MANY series, the same fold
     runs per key via groupBy(series).agg(aggregate(...))."""
-    orders = load_table(spark, sf_dir, "orders")
-    d = orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents")
-    )
-    arr = d.agg(
-        F.sort_array(F.collect_list(F.struct("day", "cents"))).alias("a")
-    ).select(F.expr("transform(a, z -> cast(z.cents as double))").alias("xs"))
+    arr = _day_series(
+        spark, sf_dir, F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
+    ).select(F.expr("transform(a, z -> cast(z.v as double))").alias("xs"))
     sum7 = "aggregate(slice(xs, {o}, 7), cast(0.0 as double), (a, v) -> a + v)"
     l0 = sum7.format(o=1) + " / 7"
     b0 = f"({sum7.format(o=8)} / 7 - {sum7.format(o=1)} / 7) / 7"

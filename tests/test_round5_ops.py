@@ -242,39 +242,6 @@ def test_isotonic_minimax_equals_pava(spark):
     assert (np.diff(got_vals) > 0).all()
 
 
-def test_poisson_glm_matches_numpy_newton(spark):
-    from pyspark.sql import functions as F
-
-    from bigdata_carprice_assignment_spark.sources.readers import load_table
-
-    rows = (
-        load_table(spark, SF, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(F.count(F.lit(1)).alias("y"))
-        .collect()
-    )
-    d0 = min(r["day"] for r in rows)
-    x1 = np.array([(r["day"] - d0).days for r in rows]) / 1000.0
-    wk = np.array([1.0 if r["day"].isoweekday() in (6, 7) else 0.0 for r in rows])
-    y = np.array([r["y"] for r in rows], dtype=float)
-    X = np.column_stack([np.ones_like(x1), x1, wk])
-    beta = np.zeros(3)
-    for _ in range(40):
-        mu = np.exp(X @ beta)
-        g = X.T @ (y - mu)
-        H = (X * mu[:, None]).T @ X
-        beta = beta + np.linalg.solve(H, g)
-    got = {
-        r["feature"]: r["coefficient"]
-        for r in registry.QUERIES["poisson_glm_daily_orders"](
-            spark, SF
-        ).collect()
-    }
-    assert got["(intercept)"] == pytest.approx(beta[0], abs=1e-5)
-    assert got["day_index_per_1000"] == pytest.approx(beta[1], abs=1e-5)
-    assert got["is_weekend"] == pytest.approx(beta[2], abs=1e-5)
-
-
 def test_gaussian_mixture_em_matches_numpy(spark):
     from pyspark.sql import functions as F
 

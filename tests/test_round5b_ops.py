@@ -100,32 +100,6 @@ def test_cooks_distance_matches_direct(spark):
         assert round(r["cooks_d"], 4) in want
 
 
-def test_huber_between_and_robust(spark):
-    got = registry.QUERIES["huber_regression_daily_revenue"](spark, SF).collect()[0]
-    # IRLS with Huber weights: some days downweighted, never all
-    assert 0 < got["n_downweighted"] < got["n_days"]
-    assert got["huber_c"] > 0
-    # direct numpy IRLS replication
-    rows = _daily_cents(spark)
-    days = np.array([(r["day"] - rows[0]["day"]).days for r in rows], dtype=float)
-    y = np.array([r["cents"] for r in rows], dtype=float) / 100
-    n = len(y)
-    sx, sy = days.sum(), y.sum()
-    sxx, sxy = (days * days).sum(), (days * y).sum()
-    slope = (sxy - sx * sy / n) / (sxx - sx * sx / n)
-    icept = sy / n - slope * (sx / n)
-    r0 = np.abs(y - (icept + slope * days))
-    c = np.quantile(r0, 0.5) / 0.6745 * 1.345
-    for _ in range(6):
-        r = np.abs(y - (icept + slope * days))
-        w = np.where(r <= c, 1.0, c / np.maximum(r, 1e-300))
-        sw, swx, swy = w.sum(), (w * days).sum(), (w * y).sum()
-        swxx, swxy = (w * days * days).sum(), (w * days * y).sum()
-        slope = (swxy - swx * swy / sw) / (swxx - swx * swx / sw)
-        icept = swy / sw - slope * (swx / sw)
-    assert abs(got["huber_slope"] - slope) / max(abs(slope), 1) < 1e-4
-
-
 def test_lda_fisher_matches_numpy(spark):
     from bigdata_carprice_assignment_spark.pipelines import carprice as cp
 
