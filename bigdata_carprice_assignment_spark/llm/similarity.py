@@ -9,6 +9,7 @@ nearest partitions only).
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Sequence
 
 import pandas as pd
@@ -208,6 +209,7 @@ def cosine_topk_lsh(
     ).orderBy(F.desc("cosine"), F.asc(id_col))
 
 
+@functools.cache
 def _srp_rademacher(n_bits: int, dim: int):
     """±1 hyperplane matrix derived from md5 — ENGINE-PORTABLE: DuckDB
     reproduces entry (i, j) as
@@ -251,7 +253,7 @@ def srp_signatures(
     @F.pandas_udf("long")
     def sig(vs: pd.Series) -> pd.Series:
         X = np.asarray(vs.tolist(), dtype=np.float64)
-        S = _srp_matrix_cached(n_bits, X.shape[1])
+        S = _srp_rademacher(n_bits, X.shape[1])
         bits = (X @ S.T) >= 0.0
         out = np.zeros(len(X), dtype=np.int64)
         for b in range(n_bits):
@@ -259,16 +261,6 @@ def srp_signatures(
         return pd.Series(out)
 
     return df.select(F.col(id_col), sig(F.col(vec_col)).alias("srp_sig"))
-
-
-def _srp_matrix_cached(n_bits: int, dim: int):
-    key = (n_bits, dim)
-    if key not in _SRP_CACHE:
-        _SRP_CACHE[key] = _srp_rademacher(n_bits, dim)
-    return _SRP_CACHE[key]
-
-
-_SRP_CACHE: dict = {}
 
 
 def srp_band_pairs(
@@ -358,7 +350,7 @@ def srp_signatures_wide(
     @F.pandas_udf("array<long>")
     def sig(vs: pd.Series) -> pd.Series:
         X = np.asarray(vs.tolist(), dtype=np.float64)
-        S = _srp_matrix_cached(n_bits, X.shape[1])
+        S = _srp_rademacher(n_bits, X.shape[1])
         bits = (X @ S.T) >= 0.0
         words = np.zeros((len(X), n_words), dtype=np.int64)
         for b in range(n_bits):
@@ -545,7 +537,7 @@ def srp_knn_join(
     screen_cos: float = 0.85,
     n_docs_stat: int | None = None,
     n_distinct_stat: int | None = None,
-    sigs_pool: str | None = None,
+    source=None,
 ) -> DataFrame:
     """Approximate kNN-join via SRP banding: candidates from the band
     join, exact double-precision cosine rerank, per-vector top-k window.
@@ -570,12 +562,12 @@ def srp_knn_join(
     1860 bits). The fixed 60-bit/10-bit setting remains for the
     mechanism-exact oracle gate.
 
-    ``sigs_pool`` caches the wide signature table per (pool, width) on
-    the ADAPTIVE wide-signature ungrouped branch ONLY — the dedup
-    branch (n_uniq <= 0.7*n_docs) builds group-grain signatures keyed
-    by a derived _gid (not corpus-stable ids), and the explicit
-    ``band_bits`` path uses the 60-bit table, so neither consults the
-    pool; callers on those routes get no caching (ADVICE r11).
+    ``source`` names an immutable ``df`` (a corpus): the wide signature
+    table is then cached per (source, width) on the ADAPTIVE
+    wide-signature ungrouped branch ONLY — the dedup branch (n_uniq <=
+    0.7*n_docs) builds group-grain signatures keyed by a derived _gid
+    (not corpus-stable ids), and the explicit ``band_bits`` path uses
+    the 60-bit table, so neither consults the cache (ADVICE r11).
 
     ``n_docs_stat`` / ``n_distinct_stat`` are CATALOG STATISTICS (r10):
     the adaptive path needs the corpus size (to pick band bits) and the
@@ -680,26 +672,24 @@ def srp_knn_join(
         else:
             n_uniq = None
         if n_uniq is None or n_uniq > 0.7 * n_docs:
-            # ``sigs_pool`` (r11b): the wide signature table is
-            # corpus-keyed index state (n rows x n_words longs — the
-            # same artifact class as the pooled 60-bit table the
-            # mechanism gate shares); callers whose input is an
-            # immutable corpus pass a pool name and warm calls skip
-            # the per-call projection matmul. Keyed by width so the
-            # tight and cheap contracts (different band counts =>
-            # different word counts) each cache their own table.
-            if sigs_pool is not None:
-                from ..plans.materialize import pinned, pool_get
+            # r11b: the wide signature table is corpus-keyed index
+            # state (n rows x n_words longs — the same artifact class as
+            # the pooled 60-bit table the mechanism gate shares); warm
+            # calls over a named source skip the per-call projection
+            # matmul. Keyed by width so the tight and cheap contracts
+            # (different band counts => different word counts) each
+            # cache their own table.
+            from ..plans.materialize import cached
 
-                key = f"{sigs_pool}:w{wide_bits}"
-                sigs = pool_get(key, df.sparkSession)
-                if sigs is None:
-                    sigs = pinned(
-                        srp_signatures_wide(df, vec_col, id_col, wide_bits),
-                        key,
-                    )
-            else:
-                sigs = srp_signatures_wide(df, vec_col, id_col, wide_bits)
+            sigs = cached(
+                df.sparkSession,
+                "srp_signatures_wide",
+                source,
+                lambda: srp_signatures_wide(df, vec_col, id_col, wide_bits),
+                vec_col=vec_col,
+                id_col=id_col,
+                n_bits=wide_bits,
+            )
             pairs = srp_band_pairs_wide(
                 sigs, id_col, wide_bits, band_bits, max_bucket, max_hamming=thr
             )

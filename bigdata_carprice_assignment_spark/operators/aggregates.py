@@ -11,14 +11,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def group_count(df: DataFrame, *cols: str, sort: bool = True) -> DataFrame:
-    """A1: ``count(brand, sort=TRUE)`` (BigDataProject.R:151-152)."""
-    out = df.groupBy(*cols).count()
-    if sort:
-        out = out.orderBy(F.desc("count"), *[F.asc(c) for c in cols])
-    return out
-
-
 def group_means(df: DataFrame, group: str, cols: Sequence[str]) -> DataFrame:
     """A2: ``aggregate(. ~ cluster, FUN=mean)`` (BigDataProject.R:480-482)."""
     return df.groupBy(group).agg(*[F.avg(c).alias(c) for c in cols])
@@ -283,7 +275,7 @@ def exact_percentiles_distributed_grouped(
     range cumulative over the per-group totals) gives the intra-group
     cumulative with no task ever owning a whole group. Returns
     (group, p, value)."""
-    from ..plans.materialize import pinned_lru
+    from ..plans.materialize import pinned
     from .windows import range_partitioned_cumsum
 
     spark = df.sparkSession
@@ -295,7 +287,7 @@ def exact_percentiles_distributed_grouped(
     # upstream is evaluated once, not twice (r11, guide §1.2). Memory is
     # bounded by the distinct-(group,value) domain — the same class the
     # cumulative's internal pin already holds; LRU keeps 4 generations.
-    counts = pinned_lru(
+    counts = pinned(
         vals.groupBy("g", "v").agg(F.count(F.lit(1)).alias("c")),
         "pctl_grouped_counts",
         keep=4,

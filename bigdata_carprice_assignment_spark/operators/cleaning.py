@@ -25,12 +25,6 @@ def lowercase_columns(df: DataFrame) -> DataFrame:
     return df.toDF(*[c.lower() for c in df.columns])
 
 
-def select_existing(df: DataFrame, wanted: Sequence[str]) -> DataFrame:
-    """P2: schema-tolerant projection — the reference's
-    ``intersect(cols, names(df))`` pattern (BigDataProject.R:277-280)."""
-    return df.select(*[c for c in wanted if c in df.columns])
-
-
 def cast_columns(df: DataFrame, cols: Sequence[str], dtype: str = "double") -> DataFrame:
     """P11: bulk cast (``as.numeric`` at BigDataProject.R:65-75). Invalid
     strings become null, matching R's coercion-with-NA-warning."""

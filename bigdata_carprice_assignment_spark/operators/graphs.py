@@ -10,19 +10,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.materialize import pinned
+from ..plans.materialize import cached, scoped_conf
 
-# pagerank's node count per pool name — a scalar of the pooled degree
-# frame (same in-session lifecycle as the pool itself; invalidated on
-# rebuild). Saves one count job per pool_reuse call.
-_PR_N: dict[str, int] = {}
+# The Pregel loops below run with AQE off: every round is the same
+# fixed-shape join+aggregate over a pinned, size-known input, so
+# per-round runtime re-optimization and its stage-barrier jobs are pure
+# driver latency. Only the loop runs in that scope; the pooled inputs it
+# reads are built before it, under the session's own planner settings.
+_NO_AQE = {"spark.sql.adaptive.enabled": "false"}
 
 
-def symmetric_adjacency(
-    e: DataFrame, pool: str | None = None
-) -> DataFrame:
+def symmetric_adjacency(e: DataFrame, source=None) -> DataFrame:
     """Symmetric adjacency (node, other) of an undirected (u, v) edge
-    list, HASH-PARTITIONED on ``node`` and optionally pooled (r11b).
+    list, HASH-PARTITIONED on ``node`` and pinned (r11b).
 
     The per-round Pregel operators (k-core, BFS) probe this frame every
     round through broadcast semi-joins and then aggregate by ``node`` —
@@ -33,34 +33,21 @@ def symmetric_adjacency(
     key is scanned from cache and satisfies the groupBy's required
     distribution outright (guide §2.4 — operations keyed the same way
     share one exchange; broadcast semi-joins preserve the layout).
-    ``pool=None`` keeps the old inline shape for one-shot callers.
-
-    POOL-KEY CONTRACT: ``pool`` must uniquely key the EDGE SOURCE — a
-    pooled generation is served verbatim with no check that it was
-    built from an equivalent edge frame, so two callers passing
-    different edge lists under one pool name would silently compute
-    over the wrong graph. Current call sites key by sf_dir (the
-    per-corpus co-purchase graph); any new caller must do the same
-    (ADVICE r11)."""
-    from ..plans.materialize import pinned, pool_get
-
+    ``source`` names the immutable edge list (see ``cached``)."""
     spark = e.sparkSession
-    if pool is not None:
-        cached = pool_get(pool, spark)
-        if cached is not None:
-            return cached
-    sym = e.select(F.col("u").alias("node"), F.col("v").alias("other")).unionAll(
-        e.select(F.col("v").alias("node"), F.col("u").alias("other"))
+    n_parts = spark.sparkContext.defaultParallelism
+    return cached(
+        spark,
+        "symmetric_adjacency",
+        source,
+        lambda: e.select(F.col("u").alias("node"), F.col("v").alias("other"))
+        .unionAll(e.select(F.col("v").alias("node"), F.col("u").alias("other")))
+        .repartition(n_parts, "node"),
+        n_parts=n_parts,
     )
-    if pool is None:
-        return sym
-    sym = sym.repartition(spark.sparkContext.defaultParallelism, "node")
-    return pinned(sym, pool)
 
 
-def triangle_census(
-    e: DataFrame, pool: str = "tri_edges", pre_pinned: bool = False
-) -> DataFrame:
+def triangle_census(e: DataFrame) -> DataFrame:
     """Exact triangle census of an undirected simple graph.
 
     ``e`` must hold one row per undirected edge as (u, v) with u < v,
@@ -71,20 +58,15 @@ def triangle_census(
     Plan: degree table → orient each edge from its (degree, id)-smaller
     endpoint → self-join oriented edges on src with an orientation-order
     guard (counts each out-out wedge once) → closure check against the
-    undirected edge set. The edge frame is pinned (pooled persist)
-    because degree, orientation, and closure all consume it.
+    undirected edge set. Degree, orientation, and closure all consume
+    the edge frame, so callers pass it pinned (the co-purchase family
+    shares one pooled generation per corpus).
 
     The degree table is O(V) rows — NOT broadcast-hinted: at graph scale
     a node-cardinality broadcast would overwhelm driver and executors,
     so the degree joins are left to AQE (which broadcasts them only when
     the measured size is actually under the threshold).
-
-    ``pre_pinned``: the caller already persisted ``e`` (e.g. the pooled
-    per-corpus co-purchase edge list shared by the whole graph family,
-    r11) — skip the internal pin so the shared generation isn't
-    re-registered (and later unpersisted) under this operator's pool."""
-    if not pre_pinned:
-        e = pinned(e, pool)
+    """
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))
@@ -137,8 +119,7 @@ def pagerank(
     e: DataFrame,
     iterations: int = 10,
     damping: float = 0.85,
-    pool: str = "pagerank",
-    pool_reuse: bool = False,
+    source=None,
 ) -> DataFrame:
     """PageRank by synchronous power iteration over an undirected simple
     graph ((u, v) rows, u < v; treated as one directed edge each way, so
@@ -172,19 +153,28 @@ def pagerank(
       materialization job is dropped; each checkpoint materializes (and
       truncates lineage) inside the first job that reads it, so the
       whole fixed-count loop drains in ONE action instead of 10+1.
-    - AQE is disabled AROUND the loop (restored after): every
-      iteration is the same fixed-shape join+aggregate over a pinned,
-      size-known input — per-iteration runtime re-optimization and its
-      stage-barrier jobs are pure driver latency here, at any scale
-      (the shuffle width stays the session's configured partitions,
-      the same scale knob every static exchange uses). Probe at sf0.1:
-      eager/AQE-on 7.4-62 s (unstable under contention), lazy/AQE-off
-      6.2-7.3 s stable.
-    """
-    from ..plans.materialize import pinned, pool_get
+    - AQE is disabled AROUND the loop (see ``_NO_AQE``; the shuffle
+      width stays the session's configured partitions, the same scale
+      knob every static exchange uses). Probe at sf0.1: eager/AQE-on
+      7.4-62 s (unstable under contention), lazy/AQE-off 6.2-7.3 s
+      stable.
 
+    ``source`` names the immutable edge list (the per-corpus co-purchase
+    graph, r11): the degree-annotated edge table, the degree table and
+    its node count are then built once and reused — rebuilding them
+    every call was ~4 jobs of pure recompute plus one count job.
+    """
     spark = e.sparkSession
     n_parts = spark.sparkContext.defaultParallelism
+    edges = e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
+        e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
+    )
+    degp = cached(
+        spark,
+        "pagerank_degrees",
+        source,
+        lambda: edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")),
+    )
     # Pin the degree-annotated edge list HASH-PARTITIONED ON src: every
     # iteration's contributions join keys on src, so the cached layout
     # already matches and the per-iteration plan never re-exchanges the
@@ -193,31 +183,15 @@ def pagerank(
     # neutral; at cluster scale (ranks too big to broadcast) it removes
     # 10 full edge shuffles. One extra exchange at build time, amortized
     # over the fixed iteration count.
-    # ``pool_reuse`` (r11): callers whose edge list is itself pooled and
-    # immutable (the per-corpus co-purchase graph) pass a corpus-keyed
-    # pool name and reuse the built generation — rebuilding the
-    # degree-annotated table every call was ~4 jobs of pure recompute.
-    # r12: the node-grain degree table and its count ride the same pool
-    # (the count job and the degree groupBy re-ran per warm call).
-    edeg = pool_get(pool + "_edeg", spark) if pool_reuse else None
-    degp = pool_get(pool + "_deg", spark) if pool_reuse else None
-    if edeg is None or degp is None:
-        edges = e.select(
-            F.col("u").alias("src"), F.col("v").alias("dst")
-        ).unionAll(e.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-        degp = pinned(deg, pool + "_deg")
-        edeg = pinned(
-            edges.join(degp, "src").repartition(n_parts, "src"), pool + "_edeg"
-        )
-        _PR_N.pop(pool, None)
-    n = _PR_N.get(pool) if pool_reuse else None
-    if n is None:
-        n = degp.count()
-        _PR_N[pool] = n
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    edeg = cached(
+        spark,
+        "pagerank_edges",
+        source,
+        lambda: edges.join(degp, "src").repartition(n_parts, "src"),
+        n_parts=n_parts,
+    )
+    n = cached(spark, "pagerank_nodes", source, degp.count)
+    with scoped_conf(spark, _NO_AQE):
         ranks = degp.select(
             F.col("src").alias("node"), F.lit(1.0 / n).alias("rank")
         )
@@ -233,8 +207,6 @@ def pagerank(
                 F.col("dst").alias("node"),
                 (F.lit(base) + F.lit(damping) * F.col("s")).alias("rank"),
             ).localCheckpoint(eager=False)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
     return ranks
 
 
@@ -242,9 +214,7 @@ def kcore_peel_trace(
     e: DataFrame,
     k: int,
     rounds: int,
-    pool: str = "kcore",
-    pre_pinned: bool = False,
-    sym_pool: str | None = None,
+    source=None,
 ) -> list[tuple[int, int, int]]:
     """Synchronous k-core peeling over an undirected simple graph
     ((u, v) rows, u < v): each round removes every node whose degree
@@ -288,24 +258,19 @@ def kcore_peel_trace(
     (``eager=False``), so the census aggregate is the job that both
     materializes the checkpoint blocks and folds the three scalars
     (the separate eager-checkpoint job per round is gone), and AQE is
-    disabled around the loop (restored after): every round is the same
-    fixed-shape semi-join+aggregate over the pinned adjacency, so
-    per-round runtime re-optimization is pure driver latency. Probe at
-    sf0.1 (6 rounds): 2.9 s eager/AQE-on → 1.7 s lazy/AQE-off, traces
+    disabled around the loop (see ``_NO_AQE``). Probe at sf0.1 (6
+    rounds): 2.9 s eager/AQE-on → 1.7 s lazy/AQE-off, traces
     bit-identical.
-    """
-    from ..plans.materialize import pinned
 
+    ``e`` is read through the pinned symmetric adjacency only, so
+    callers need not pin it; ``source`` names the immutable edge list
+    (see ``symmetric_adjacency``).
+    """
     if k < 1:
         raise ValueError("kcore_peel_trace requires k >= 1")
-    edges = e.select("u", "v")
-    if not pre_pinned:
-        edges = pinned(edges, pool + "_edges")
     spark = e.sparkSession
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        sym = symmetric_adjacency(edges, sym_pool)
+    sym = symmetric_adjacency(e.select("u", "v"), source)
+    with scoped_conf(spark, _NO_AQE):
         alive = sym.select("node").distinct().localCheckpoint()
 
         def alive_degrees(alive_df: DataFrame) -> DataFrame:
@@ -342,13 +307,11 @@ def kcore_peel_trace(
             n_alive = ge  # #(deg_{r-1} >= k), carried from the last census
             _, n_edges, ge = census(deg)
             trace.append((r, n_alive, n_edges))
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
     return trace
 
 
 def bfs_hop_counts(
-    e: DataFrame, seeds: DataFrame, hops: int, sym_pool: str | None = None
+    e: DataFrame, seeds: DataFrame, hops: int, source=None
 ) -> list[tuple[int, int]]:
     """Multi-source BFS over an undirected simple graph ((u, v) rows,
     u < v) from a ``seeds`` frame of (node) rows: returns the per-hop
@@ -367,15 +330,14 @@ def bfs_hop_counts(
     r12: ONE driver action per hop — frontier/visited checkpoints are
     LAZY (the per-hop ``frontier.count()`` materializes the frontier;
     the visited union materializes inside the next hop's anti-join) and
-    AQE is disabled around the fixed-shape loop (restored after) — the
+    AQE is disabled around the fixed-shape loop (see ``_NO_AQE``) — the
     same per-round driver-latency fix as ``kcore_peel_trace``.
+    ``source`` names the immutable edge list (see
+    ``symmetric_adjacency``).
     """
-    edges = e.select("u", "v")
     spark = e.sparkSession
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        sym = symmetric_adjacency(edges, sym_pool)
+    sym = symmetric_adjacency(e.select("u", "v"), source)
+    with scoped_conf(spark, _NO_AQE):
         frontier = seeds.select("node").distinct().localCheckpoint()
         visited = frontier
         trace = [(0, frontier.count())]
@@ -389,6 +351,4 @@ def bfs_hop_counts(
             )
             visited = visited.unionAll(frontier).localCheckpoint(eager=False)
             trace.append((h, frontier.count()))
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
     return trace

@@ -66,16 +66,14 @@ def range_partitioned_cumsum(
     eviction stays safe because lineage recompute re-reads the SAME
     shuffle files (boundaries are fixed at shuffle-write time).
     """
-    from ..plans.materialize import pinned_lru
+    from ..plans.materialize import pinned
 
     # LRU pool family: one fixed pool name would make the SECOND cumsum
     # in a single query plan (Spearman ranks both variables, Kruskal
     # ranks + ties) evict the first's blocks mid-plan, forcing a
-    # recompute of that branch from shuffle files. pinned_lru keys each
-    # build by a monotonic id (no name reuse — a pin is only evicted by
-    # age, never by slot collision, and concurrent builds can't race a
-    # shared slot counter) and keeps the 4 most recent generations.
-    part = pinned_lru(
+    # recompute of that branch from shuffle files. keep=4 holds the 4
+    # most recent generations, so a pin is only ever evicted by age.
+    part = pinned(
         df.repartitionByRange(
             num_ranges, *[F.asc(c) for c in order_cols]
         ).withColumn("_pid", F.spark_partition_id()),

@@ -111,19 +111,6 @@ def brand_levels(df: DataFrame) -> list[str]:
     return sorted(levels, key=lambda s: (s.casefold(), s.swapcase()))
 
 
-def one_hot_brand(df: DataFrame, levels: list[str], full_rank: bool = True) -> DataFrame:
-    """M2: dummyVars(fullRank=TRUE) — drop the first level, one 0/1 column
-    per remaining level, named ``brand_<level>`` (BigDataProject.R:285-288).
-    A single projection (no StringIndexer detour needed for a fixed level
-    set)."""
-    use = levels[1:] if full_rank else levels
-    cols = [
-        F.when(F.col("brand") == lv, 1.0).otherwise(0.0).alias(f"brand_{lv}")
-        for lv in use
-    ]
-    return df.select(*[c for c in df.columns if c != "brand"], *cols)
-
-
 def ml_ready(df: DataFrame, target: str = "price") -> DataFrame:
     """Phase 8: feature projection + one-hot (BigDataProject.R:277-288).
 

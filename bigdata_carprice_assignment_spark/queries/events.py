@@ -1245,22 +1245,27 @@ SELECT (SELECT count(*) FROM full_agg)::BIGINT AS n_days_total,
 def incremental_daily_refresh_accounting(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Partition-scoped incremental view maintenance, audited: a daily
-    aggregate built from the initial load is refreshed by recomputing
-    ONLY the days the late batch (odd event_ids landing in the trailing
-    5-day window) touches
-    — unchanged days are carried forward — and the audited invariant is
-    that the incrementally-maintained table EQUALS the full recompute
-    (EXCEPT-count pinned to 0 in the hashed row), with the recompute
-    fraction exposed.
+    """Partition-scoped incremental view maintenance: a daily aggregate
+    built from the initial load is refreshed by recomputing ONLY the
+    days the late batch (odd event_ids landing in the trailing 5-day
+    window) touches — unchanged days are carried forward — with the
+    recompute fraction exposed.
+
+    The audit (EXCEPT-count, 0 in the hashed row) checks the
+    carry-forward/refresh ROUTING: that the maintained table, assembled
+    from carried base days plus refreshed late days, equals the per-day
+    re-sum of the SAME (day, late?) partials. It is not an independent
+    full recompute from the fact table — both sides come from one
+    grouped pass, so an error in that pass would show on both. The
+    DuckDB oracle, which does recompute from the raw events, is what
+    checks the partials themselves.
 
     Scale: this is how a 100 TB daily rollup absorbs late data — the
     refresh reads only the affected partitions (here an IN-filter that
     prunes to PartitionFilters on a day-partitioned sink, cf.
-    partitioned_parquet_roundtrip), the carry-forward is a partition-
-    key anti-join on the AGGREGATE (day grain, calendar-bounded), and
-    the equality audit is the regression test you run on the pipeline,
-    not per batch. Value sums in exact integer cents."""
+    partitioned_parquet_roundtrip) and the carry-forward is a partition-
+    key anti-join on the AGGREGATE (day grain, calendar-bounded). Value
+    sums in exact integer cents."""
     raw = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     ev = raw.select(
         "event_id", "value", F.to_date(F.date_trunc("day", "ts")).alias("day")
@@ -1280,9 +1285,9 @@ def incremental_daily_refresh_accounting(
     # a long, and every cents partial sums integer-valued doubles
     # (round(value*100)) whose running sums stay far under 2^53, so any
     # grouping yields the identical double → identical long.
-    from ..plans.materialize import pinned_lru
+    from ..plans.materialize import pinned
 
-    g = pinned_lru(
+    g = pinned(
         ev.groupBy("day", is_late.alias("_late")).agg(n, cents),
         "incr_refresh_day_parity",
         keep=2,
@@ -2333,9 +2338,9 @@ def order_value_qq_period_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # side once and the late side once per decile — up to 18 plans,
     # each re-running the fact-sized percentile buffers; profiler: 33
     # jobs per warm run). One evaluation, 2 cached rows.
-    from ..plans.materialize import pinned_lru
+    from ..plans.materialize import pinned
 
-    q = pinned_lru(q, "qq_drift_quantiles", keep=2)
+    q = pinned(q, "qq_drift_quantiles", keep=2)
     e = q.filter(F.col("period") == "early")
     late = q.filter(F.col("period") == "late")
     rows = None

@@ -999,12 +999,12 @@ def customer_upsert_merge_accounting(spark: SparkSession, sf_dir: str) -> DataFr
     w = Window.partitionBy("o_custkey").orderBy(
         F.desc("o_orderdate"), F.desc("o_orderkey")
     )
-    from ..plans.materialize import pinned_lru
+    from ..plans.materialize import pinned
 
     # pinned (r12, guide §1.2): ``latest`` feeds both the feed filter
     # and the insert slice — two full evaluations of the rank window
     # before; the pin is customer-grain (bounded), evaluated once.
-    latest = pinned_lru(
+    latest = pinned(
         orders.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .select(

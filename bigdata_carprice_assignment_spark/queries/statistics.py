@@ -831,12 +831,12 @@ def kruskal_wallis_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = orders.select(
         F.col("o_totalprice").alias("v"), F.col("o_orderpriority").alias("g")
     )
-    from ..plans.materialize import pinned_lru
+    from ..plans.materialize import pinned
 
     # pinned (r11): vg feeds both the per-value totals (rank cumulative)
     # and the per-group rank join — unpinned, the fact groupBy ran twice
     # (guide §1.2). Distinct-(value,group) rows, LRU-bounded.
-    vg = pinned_lru(
+    vg = pinned(
         s.groupBy("v", "g").agg(F.count(F.lit(1)).alias("tg")),
         "kruskal_vg",
         keep=2,
@@ -1804,12 +1804,12 @@ def anderson_darling_k_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = orders.select(
         F.col("o_totalprice").alias("v"), F.col("o_orderpriority").alias("g")
     )
-    from ..plans.materialize import pinned_lru
+    from ..plans.materialize import pinned
 
     # pinned (r11): vg feeds the value totals, the group sizes, AND the
     # (v,g) grid join — three evaluations of the fact groupBy before
     # (guide §1.2). Distinct-(value,group) rows, LRU-bounded.
-    vg = pinned_lru(
+    vg = pinned(
         s.groupBy("v", "g").agg(F.count(F.lit(1)).alias("f")),
         "ad_vg",
         keep=2,
@@ -2427,13 +2427,6 @@ def _pois_case_sql(h: str) -> str:
     return f"(CASE{branches} ELSE 8 END)"
 
 
-def _pois_case_col(h: F.Column) -> F.Column:
-    w = F.when(h < _POIS1_HEX[0], 0)
-    for k in range(1, len(_POIS1_HEX)):
-        w = w.when(h < _POIS1_HEX[k], k)
-    return w.otherwise(8)
-
-
 _BOOT_B = 32
 
 # Each md5 digest feeds FOUR replicates (one 32-bit uniform per 8 hex
@@ -2839,7 +2832,7 @@ def countmin_heavy_hitters_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     scanned once, not twice. The frequency table is lazily pinned: the
     cells pass materializes it in-pass, the top-10 side reads cache."""
     from ..llm.text import portable_hash60
-    from ..plans.materialize import pinned_lru
+    from ..plans.materialize import pinned
 
     li = load_table(spark, sf_dir, "lineitem")
 
@@ -2860,11 +2853,12 @@ def countmin_heavy_hitters_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    freq = pinned_lru(
+    freq = pinned(
         li.groupBy(F.col("l_partkey").alias("k")).agg(
             F.count(F.lit(1)).alias("exact")
         ),
         "cm_key_freq",
+        keep=4,
         eager=False,  # lazy: the cells pass materializes the cache in-pass
     )
     cells = (

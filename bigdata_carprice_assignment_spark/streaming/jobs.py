@@ -293,9 +293,9 @@ def run_to_completion(
     the session conf after. On a real cluster the same plans run with
     shuffle partitions sized to the stream volume — this knob is replay
     posture, not engine semantics."""
+    from ..plans.materialize import scoped_conf
+
     spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     # r12 (guide §6 — I/O layout): the drain's checkpoint (offset WAL,
     # commit log, state-store deltas) is EPHEMERAL fixture state — the
     # default temp dir sits on spinning /tmp, and its fsync-ish writes
@@ -314,23 +314,22 @@ def run_to_completion(
     ckpt_base = os.environ.get("SPARK_GRAFT_STREAM_CKPT_DIR")
     if ckpt_base is None and os.access("/dev/shm", os.W_OK):
         ckpt_base = "/dev/shm/spark_graft_stream_ckpt"
-    ckpt: str | None = None
+    writer = (
+        stream_df.writeStream.outputMode(output_mode).format("memory").queryName(name)
+    )
+    ckpt = f"{ckpt_base}/{name}_{uuid.uuid4().hex}" if ckpt_base else None
+    if ckpt:
+        writer = writer.option("checkpointLocation", ckpt)
     try:
-        writer = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-        )
-        if ckpt_base:
-            ckpt = f"{ckpt_base}/{name}_{uuid.uuid4().hex}"
-            writer = writer.option("checkpointLocation", ckpt)
-        q = writer.start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        with scoped_conf(
+            spark, {"spark.sql.shuffle.partitions": str(state_partitions)}
+        ):
+            q = writer.start()
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         if ckpt:
             shutil.rmtree(ckpt, ignore_errors=True)
     return spark.sql(f"SELECT * FROM {name}")

@@ -141,14 +141,15 @@ def test_grouped_offset_cumsum_matches_window(spark):
 
 def test_pagerank_lazy_checkpoint_loop_stable(spark):
     """pagerank (r12: lazy localCheckpoint + AQE-off loop) must return
-    identical rows on repeated calls and restore the AQE conf."""
+    identical rows on repeated calls (the second reuses the cached
+    degree tables and node count) and restore the AQE conf."""
     from bigdata_carprice_assignment_spark.operators.graphs import pagerank
 
     edges = [(1, 2), (1, 3), (2, 3), (3, 4), (4, 5), (2, 5), (5, 6)]
     e = spark.createDataFrame(edges, "u long, v long")
     before = spark.conf.get("spark.sql.adaptive.enabled")
-    r1 = sorted(map(tuple, pagerank(e, iterations=5, pool="t12pr").collect()))
-    r2 = sorted(map(tuple, pagerank(e, iterations=5, pool="t12pr").collect()))
+    r1 = sorted(map(tuple, pagerank(e, iterations=5, source="t12pr").collect()))
+    r2 = sorted(map(tuple, pagerank(e, iterations=5, source="t12pr").collect()))
     assert r1 == r2
     assert spark.conf.get("spark.sql.adaptive.enabled") == before
     # sanity: ranks sum to ~1

@@ -169,7 +169,7 @@ def test_triangle_census_matches_brute_force(spark):
             len(adj[u]) * (len(adj[u]) - 1) // 2 for u in nodes
         )
         e_df = spark.createDataFrame(edges, "u long, v long")
-        row = triangle_census(e_df, pool=f"tri_test_{trial}").collect()[0]
+        row = triangle_census(e_df).collect()[0]
         assert row["n_triangles"] == brute_t, (trial, n, p, len(edges))
         assert row["n_wedges"] == brute_w
         assert row["n_edges"] == len(edges)

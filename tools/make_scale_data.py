@@ -9,7 +9,8 @@ candidate populations grow with the corpus — deliberate: the probe
 measures how candidate-generation COST scales, and clone-heavy corpora
 are the adversarial case for banding/bucketing.
 
-Usage: python tools/make_scale_data.py   (then tools/scale_probe.py)
+Usage: python tools/make_scale_data.py   (the probe that read these corpora,
+tools/scale_probe.py, is in git history up to commit ee7de36)
 """
 
 from __future__ import annotations
